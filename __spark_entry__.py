@@ -3,8 +3,8 @@
 queries() = every SURVEY.md §2 operator re-expressed over the driver's
 testdata tables + the training-data ops (dedup/similarity/text), each paired
 with a DuckDB oracle in oracle_sql(). The crawl engine itself (frontier,
-bloom seen-set, quota scheduler, politeness, extraction) runs over its own
-catalog — covered by `crawl_round_smoke` (deterministic golden-VALUES
+url_state seen-set join, quota scheduler, politeness, extraction) runs over
+its own catalog — covered by `crawl_round_smoke` (deterministic golden-VALUES
 oracle over a 3-round crawl summary) and exhaustively by
 tests/test_e2e_crawl.py.
 """
@@ -64,7 +64,7 @@ def _crawl_round_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx = CrawlContext(
         spark, cat, load_rules(synth.gen_rules(params)), pages,
         synth.gen_robots_df(spark, params),
-        settings={"buckets": 4, "bloom_keys_per_bucket": 100},
+        settings={"buckets": 4},
     )
     run_rounds(ctx, 3)
     flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)

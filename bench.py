@@ -60,17 +60,15 @@ SCALING_PARAMS = dict(n_domains=4, cats=8, lists_per_cat=64,
                       details_per_list=640, hot_details_per_list=2700,
                       seed_all_lists=True, save_pages=False)
 SCALING_SETTINGS = {"schedule_quantity_limitation": 2_000_000, "buckets": 32,
-                    "bloom_keys_per_bucket": 50_000,
                     "concurrent_commits": True}
 SCALING_ROUNDS = 2
 BENCH_ROUNDS = 4
 BENCH_SETTINGS = {
     "schedule_quantity_limitation": 50_000,  # throughput mode: quota open
     # bucket count sized to the data (~39k urls / 16 ≈ 2.4k rows/bucket):
-    # partitioned url_state/bloom/updates writes cost per-partition-dir floor,
+    # partitioned url_state/updates writes cost per-partition-dir floor,
     # so 64 buckets on an 11k-page corpus was pure oversharding
     "buckets": 16,
-    "bloom_keys_per_bucket": 50_000,
     "default_host_budget": 1 << 30,
     # commits stay SEQUENTIAL at local[32]: concurrent py4j write jobs stall
     # each other 8-20x there (measured, plans/round.py commit notes) — the r2

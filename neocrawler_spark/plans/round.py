@@ -6,8 +6,9 @@ columnar:
 
   frontier ⋈ url_state → admission predicate → quota window (deterministic
   carry) → politeness top-k per host → fetch = batch ⋈ pages → validation →
-  extraction pUDF → (links: explode → bloom probe → discovery predicate →
-  frontier append) ∥ (content → crawled) ∥ (state merge) ∥ (metrics agg)
+  extraction pUDF → (links: explode → seen-set join (exact bucketed left join
+  against url_state) → discovery predicate → frontier append) ∥ (content →
+  crawled) ∥ (state merge) ∥ (metrics agg)
 
 Determinism contract (north_rule: "matching the reference's crawl ordering
 and URL-seen set under the same seed list + politeness budget"):
@@ -38,7 +39,6 @@ from pyspark.sql import functions as F
 from .. import schema
 from ..functions import canon
 from ..functions.extract import extract_udf
-from ..operators import bloom
 from ..operators.scheduler import (
     consume_quota,
     per_host_budget,
@@ -70,7 +70,6 @@ DEFAULT_SETTINGS = {
     "save_content": True,
     "buckets": 64,
     "default_host_budget": 1 << 30,
-    "bloom_keys_per_bucket": 100_000,
     "politeness_salts": 16,
 }
 
@@ -100,9 +99,11 @@ def _with_rule_cols(df: DataFrame, ctx: "CrawlContext", cols: list[str]) -> Data
     driver-known config (dozens), and every broadcast join against them costs
     a SEPARATE sequential job per action (build + collect + relation) — the
     event log showed 4-5 such sub-second jobs per round whose latency, not
-    compute, was the cost. element_at on a missing key yields NULL, exactly
-    the old left join. A real cluster keeps the same shape: the map literal
-    ships inside the task binary like any broadcast, minus the build job.
+    compute, was the cost. try_element_at on a missing key yields NULL,
+    exactly the old left join, on every Spark version and with ANSI mode on
+    (element_at raises there). A real cluster keeps the same shape: the map
+    literal ships inside the task binary like any broadcast, minus the build
+    job.
     The map Column is built ONCE per context and reused across all sites and
     rounds: Column construction is py4j-call-bounded, and rebuilding the
     full literal at every site was measured at 3.4 s per 4-round crawl."""
@@ -113,7 +114,7 @@ def _with_rule_cols(df: DataFrame, ctx: "CrawlContext", cols: list[str]) -> Data
                  "rule_rank": "int", "keywords": "array<string>"}.get(c, "string")
             out = out.withColumn(c, F.lit(None).cast(t))
         return out
-    looked = F.element_at(ctx.rules_map_col(tuple(cols)), F.col("rule_key"))
+    looked = F.try_element_at(ctx.rules_map_col(tuple(cols)), F.col("rule_key"))
     out = df.withColumn("_rl", looked)
     for c in cols:
         out = out.withColumn(c, F.col(f"_rl.{c}"))
@@ -232,23 +233,9 @@ class CrawlContext:
 def load_state(cat: Catalog) -> dict:
     rec = cat.last_completed_round()
     if rec is None:
-        return {"round": 0, "first_schedule": {}, "consumed": {}}
+        return {"round": 0, "first_schedule": {}}
     cat.restore_round(rec)  # crash-resume: discard any partial later round
     return rec["metrics"]["state"]
-
-
-def _frontier_filter(consumed: dict[str, list[list[int]]]):
-    """Mask consumed (popped) seq intervals — the append-only frontier story:
-    consumption advances per-rule interval metadata instead of rewriting
-    files (pops are contiguous in pop order, so each round adds ≤1 interval
-    per rule)."""
-    cond = F.lit(True)
-    for rk, intervals in consumed.items():
-        for lo, hi in intervals:
-            cond = cond & ~(
-                (F.col("rule_key") == rk) & F.col("seq").between(int(lo), int(hi))
-            )
-    return cond
 
 
 def _ev(events: list[str]):
@@ -263,7 +250,7 @@ def _ring3(col):
 def run_round(ctx: CrawlContext, state: dict | None = None) -> dict:
     """Adaptive-width wrapper: the round body retunes
     spark.sql.shuffle.partitions per phase from manifest/footer row counts
-    and (by default) plans with AQE off — restore both afterwards so
+    and plans with AQE off — restore both afterwards so
     co-resident analytic queries keep the session defaults."""
     spark = ctx.spark
     saved = {k: spark.conf.get(k) for k in
@@ -289,9 +276,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     seq_base = round_no * ROUND_STRIDE
 
     url_state = cat.read(spark, "url_state", schema.URL_STATE)
-    frontier = cat.read(spark, "frontier", schema.FRONTIER).where(
-        _frontier_filter(state.get("consumed", {}))
-    )
+    frontier = cat.read(spark, "frontier", schema.FRONTIER)
     # Stale-trace repair on pop (checkURL, scheduler/index.js:350-370): when
     # the rule set changed between rounds, frontier entries whose rule_key no
     # longer exists are re-matched against the live rules (pUDF over the
@@ -341,7 +326,6 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         keep = frontier.where(~F.col("rule_key").isin(changed_keys))
         frontier = keep.unionByName(sl.select(*keep.columns))
     scheduled = cat.read(spark, "scheduled", schema.SCHEDULED)
-    shards = cat.read(spark, "bloom", bloom.BLOOM_SCHEMA)
     rules_df = ctx.rules_df()
 
     man = cat.manifest("scheduled")
@@ -361,22 +345,18 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     # from GROWING with the cluster (r4 scaling: a 1.6k-row gated stage
     # spent more wall at local[16] than at local[4] purely on task launch +
     # py4j latency; at 1000 executors a 16k-task empty stage would be worse).
-    # AQE is OFF inside the round by default (settings round_aqe=True to
-    # re-enable): the round's partitioning is deterministic by construction
-    # — md5-uniform url_hash keys, salted politeness, bucketed prefix sums,
+    # AQE is OFF inside the round: the round's partitioning is deterministic
+    # by construction — md5-uniform url_hash keys, salted politeness, bucketed prefix sums,
     # manifest-known sizes — so runtime re-planning has no information
     # advantage, and its per-exchange materialization barriers are a
     # measured ~2x job-count overhead per round (127 vs 59 driver jobs).
     # Analytic queries outside run_round keep AQE on (session default).
     _dpar = spark.sparkContext.defaultParallelism
-    _adaptive_w = st.get("adaptive_shuffle", True)
 
     def _set_width(rows: int, floor: int = 1, cap: int | None = None):
-        if _adaptive_w:
-            p = max(1, floor, min(cap or 2 * _dpar, (rows + 49_999) // 50_000))
-            spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    if _adaptive_w and not st.get("round_aqe", False):
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        p = max(1, floor, min(cap or 2 * _dpar, (rows + 49_999) // 50_000))
+        spark.conf.set("spark.sql.shuffle.partitions", str(p))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # Staging policy: every cut point is ALWAYS materialized. (Measured
     # alternative: inlining the cheap JVM chain for small rounds removes the
@@ -493,11 +473,6 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         _set_width(_frontier_rows + len(seed_rows))
         fr2 = cat.stage(spark, round_no, "fr2", fr2_plan,
                         partition_by=["popped"], shuffle=False)
-    popped_bounds = (
-        fr2.where("popped").groupBy("rule_key")
-        .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi")).collect()
-        if st.get("collect_pop_metrics") else []
-    )
 
     # ---------------- A3: assemble the scheduled queue (rpush order pinned)
     sched_seeds = seeds_df.withColumn(
@@ -774,17 +749,13 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             Window.partitionBy("url_hash").orderBy("parent_seq", "pos")))
         .where("rn = 1").drop("rn")
     )
-    probed = bloom.probe(cand, shards)
-    _mark("probe_done")
 
-    # ONE branch for bloom-positives AND negatives (probe fused into the pe
-    # stage job — the old probed/pe split cost an extra materialization per
-    # round): the url_state left join is a no-op for bloom-negatives (no
-    # false negatives ⇒ negatives are never in url_state), so
-    # coalesce(m_*, s_*) degenerates to the overlay for them — identical to
-    # the old two-branch union. The scale economics are unchanged: the
-    # url_state side is pruned by the runtime bloom filter / bucket
-    # co-location either way; negatives only ride the small candidate side.
+    # The seen-set IS this exact left join against url_state (the reference's
+    # per-link hgetall, pipeline.js:119-125): a candidate is new iff neither
+    # url_state nor this round's overlay knows it. The url_state side is
+    # pruned by bucket co-location and the runtime join filter session.py
+    # enables; a persistent filter in front would need deletes to follow
+    # url_state eviction, and this crawl never evicts.
     mid_upd = _mid_round_overlay(new_sched, ex, failed, denied, round_ts)
     # discovery volume is not footer-known until the pe stage lands; size it
     # from the fetched batch with a links-per-page allowance (64), floored so
@@ -794,7 +765,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
                floor=min(_dpar, (batch_rows + 49) // 50))
     pe = cat.stage(
         spark, round_no, "pe",
-        probed.join(
+        cand.join(
             url_state.select(
                 "url_hash", F.col("status").alias("s_status"),
                 F.col("last").alias("s_last"), F.col("version").alias("s_version"),
@@ -802,12 +773,9 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             "url_hash", "left",
         )
         .join(mid_upd, "url_hash", "left")
-        .withColumn("e_status",
-                    F.coalesce("m_status", F.when(F.col("maybe_seen"), F.col("s_status"))))
-        .withColumn("e_last",
-                    F.coalesce("m_last", F.when(F.col("maybe_seen"), F.col("s_last"))))
-        .withColumn("e_version",
-                    F.coalesce("m_version", F.when(F.col("maybe_seen"), F.col("s_version"))))
+        .withColumn("e_status", F.coalesce("m_status", "s_status"))
+        .withColumn("e_last", F.coalesce("m_last", "s_last"))
+        .withColumn("e_version", F.coalesce("m_version", "s_version"))
         .drop("m_status", "m_last", "m_version", "s_status", "s_last", "s_version")
         .transform(lambda d: _with_rule_cols(d, ctx, ["interval_s"]))
         .withColumn("d_new", F.col("e_status").isNull())
@@ -896,9 +864,8 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         .withColumn("bucket", canon.bucket_of_hash(buckets))
     )
     # all_new stays UNSTAGED (r1 had a dedicated stage job): it derives from
-    # already-staged pe/new_sched, and its only consumers are the updates
-    # stage below (joined in) and the bloom update (re-derived from the
-    # staged updates via is_new)
+    # already-staged pe/new_sched, and its only consumer is the updates stage
+    # below (joined in)
     all_new = disc_new.unionByName(seed_new).dropDuplicates(["url_hash"])
 
     updates = (
@@ -923,16 +890,14 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             .otherwise(F.col("events")),
         )
         .withColumn("u_bucket", F.coalesce("n_bucket", canon.bucket_of_hash(buckets)))
-        .withColumn("is_new", F.col("n_status").isNotNull().cast("int"))
     )
-    # consumed by the merge write AND the bloom update; partitioned by
-    # (u_bucket, is_new) so the touched-bucket and bloom-touched sets read
-    # off the stage's directory names — replaces two distinct().collect()
-    # jobs per round with a driver-side listdir
+    # partitioned by u_bucket so the touched-bucket set reads off the stage's
+    # directory names — a driver-side listdir instead of a distinct().collect()
+    # job per round
     updates = cat.stage(spark, round_no, "updates", updates,
-                        partition_by=["u_bucket", "is_new"])
-    parts = cat.stage_partition_values(round_no, "updates")
-    touched_buckets = sorted({int(p["u_bucket"]) for p in parts})
+                        partition_by=["u_bucket"])
+    touched_buckets = sorted({int(p["u_bucket"]) for p in
+                              cat.stage_partition_values(round_no, "updates")})
     _mark("updates_done")
     merged = (
         url_state.where(
@@ -989,7 +954,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         c for r in ctx.rules if r["type"] == "node"
         for c in [(r.get("extract_rule") or {}).get("category")] if c
     })
-    cat_col = F.element_at(F.col("extracted"), "$category")
+    cat_col = F.try_element_at(F.col("extracted"), F.lit("$category"))
     # With categories configured, ALL crawled tables commit from ONE write:
     # the content frame is staged partitioned by routed category (no
     # reshuffle) and each table adopts its partition's files driver-side —
@@ -1068,16 +1033,6 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         .withColumn("p_domain", F.coalesce(_domain_expr(), F.lit("")))
     )
 
-    # bloom's replaced-partition set is ONLY buckets holding new hashes —
-    # url_state may touch more buckets (status-only updates) whose shards
-    # must carry over untouched. new_hashes re-reads the staged updates
-    # (is_new partition pruning), bloom_touched comes from the dir listing.
-    new_hashes = updates.where("is_new = 1").select(
-        "url_hash", F.col("u_bucket").cast("int").alias("bucket")
-    )
-    shards_new = bloom.update_shards(spark, shards, new_hashes, st["bloom_keys_per_bucket"])
-    bloom_touched = sorted({int(p["u_bucket"]) for p in parts if int(p["is_new"]) == 1})
-
     frontier_cols = [f.name for f in schema.FRONTIER.fields]
 
     def _commit_frontier():
@@ -1086,9 +1041,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         # hardlink + footer scan — the extra working columns in those files
         # are invisible through the FRONTIER-schema read), then APPEND this
         # round's discoveries as the only Spark write — skipped outright
-        # when the pe stage is footer-known empty (no discovery). Prod keeps
-        # the same shape with consumed-interval metadata instead of the
-        # adopt-overwrite.
+        # when the pe stage is footer-known empty (no discovery).
         snap = cat.commit_files(
             "frontier",
             cat.stage_partition_files(round_no, "fr2", popped="false"),
@@ -1134,15 +1087,6 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
                 files_per_partition=4 if _state_rows > 2_000_000 else 1,
             )
         ),
-        "bloom": lambda: (
-            cat.commit_files("bloom", [], mode="append", round_no=round_no)
-            if not bloom_touched else
-            cat.commit(
-                "bloom", shards_new.withColumn("pbucket", F.col("bucket")),
-                mode="overwrite-partitions", round_no=round_no, partition_by=["pbucket"],
-                replaced_partitions={"pbucket": bloom_touched},
-            )
-        ),
         "crawled": _commit_crawled,
         "fetch_log": lambda: (
             cat.commit_files("fetch_log", [], mode="append", round_no=round_no)
@@ -1173,8 +1117,8 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     # one width for the whole commit pool (conf is session-shared; concurrent
     # commit threads must not race it): dominated by the url_state MERGE
     # (state rows + this round's updates) and the fetch_log wave append.
-    # Capped at ONE wave of cores: with concurrent_commits, 6 jobs x 2-cores
-    # width queue ~12x cores tasks at once — the same driver/scheduler
+    # Capped at ONE wave of cores: with concurrent_commits, 5 jobs x 2-cores
+    # width queue ~10x cores tasks at once — the same driver/scheduler
     # contention measured for concurrent commits at local[32].
     # FLOORED at the touched-bucket count (guide §2.5 — data-derived, not
     # core-derived): the 50k-rows/task width model undersizes the url_state
@@ -1208,17 +1152,11 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         "denied": status_counts.get("robots_denied", 0),
         "scheduled_backlog": backlog,
         "balance": balance,
-        "popped_intervals": {
-            r["rule_key"]: [int(r["lo"]), int(r["hi"])] for r in popped_bounds
-        },
         "commit_s": commit_s,
     }
     new_state = {
         "round": round_no,
         "first_schedule": first_sched,
-        # consumed rows are physically dropped by the frontier rewrite above;
-        # in append-only mode this would accumulate popped_intervals instead
-        "consumed": {},
         # the committed frontier now holds ONLY entries written under the
         # current rule set (repair ran this round if it was needed), so the
         # signature history collapses to the live one
@@ -1227,7 +1165,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         # frontier slice of any rule whose signature changed (transformLink)
         "id_sigs": id_sigs,
     }
-    _mark("bloom_counts_done")
+    _mark("record_built")
     keys = list(_t.keys())
     round_metrics["phase_s"] = {
         keys[i]: round(_t[keys[i]] - _t[keys[i - 1]], 2) for i in range(1, len(keys))

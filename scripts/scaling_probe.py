@@ -27,8 +27,7 @@ SIZES = {
                 details_per_list=700, hot_details_per_list=2800,
                 seed_all_lists=True),
 }
-SETTINGS = {"schedule_quantity_limitation": 6_000_000, "buckets": 64,
-            "bloom_keys_per_bucket": 200_000}
+SETTINGS = {"schedule_quantity_limitation": 6_000_000, "buckets": 64}
 
 
 def main():

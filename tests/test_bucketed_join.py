@@ -52,7 +52,7 @@ def test_bucketed_crawl_bit_identical(spark, tmp_path):
         cat = Catalog(tmp_path / sub)
         ctx = CrawlContext(spark, cat, rules, pages,
                            synth.gen_robots_df(spark, PARAMS),
-                           settings={"buckets": 4, "bloom_keys_per_bucket": 200,
+                           settings={"buckets": 4,
                                      # force the SHUFFLE_HASH/bucketed branch
                                      "fetch_broadcast_limit": 1})
         run_rounds(ctx, 2)

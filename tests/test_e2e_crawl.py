@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from neocrawler_spark import schema, synth
-from neocrawler_spark.operators import bloom
 from neocrawler_spark.plans.round import CrawlContext, load_state, run_round
 from neocrawler_spark.rules import load_rules
 from neocrawler_spark.sources.tables import Catalog
@@ -26,8 +25,7 @@ def make_ctx(spark, tmp_path, sub="wh", limit=500):
     robots = synth.gen_robots_df(spark, PARAMS)
     return CrawlContext(
         spark, cat, rules, pages, robots,
-        settings={"schedule_quantity_limitation": limit, "buckets": 8,
-                  "bloom_keys_per_bucket": 1000},
+        settings={"schedule_quantity_limitation": limit, "buckets": 8},
     )
 
 
@@ -128,15 +126,6 @@ def test_robots_disallow_never_fetched(crawled_ctx):
     assert bad.count() == 0
     denied = flog.where(F.col("status") == "robots_denied")
     assert denied.count() >= 0  # denial rows appear once that link is discovered
-
-
-def test_bloom_covers_url_state(crawled_ctx):
-    """Every url_state hash must probe positive (no false negatives ever)."""
-    ctx, _ = crawled_ctx
-    us = table(ctx, "url_state", schema.URL_STATE)
-    shards = table(ctx, "bloom", bloom.BLOOM_SCHEMA)
-    probed = bloom.probe(us.select("url_hash", "bucket"), shards)
-    assert probed.where(~F.col("maybe_seen")).count() == 0
 
 
 def test_rerun_determinism(spark, tmp_path):

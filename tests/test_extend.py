@@ -26,7 +26,7 @@ def make_ctx(spark, tmp_path, sub, **kw):
     return CrawlContext(
         spark, cat, rules, pages, synth.gen_robots_df(spark, PARAMS),
         settings={"schedule_quantity_limitation": 500, "buckets": 4,
-                  "bloom_keys_per_bucket": 500, **kw.pop("settings", {})},
+                  **kw.pop("settings", {})},
         **kw,
     )
 
@@ -166,8 +166,7 @@ def test_stale_trace_redetect_on_pop(spark, tmp_path):
     rules1 = load_rules(synth.gen_rules(PARAMS))
     pages = synth.gen_pages_df(spark, PARAMS)
     robots = synth.gen_robots_df(spark, PARAMS)
-    common = {"schedule_quantity_limitation": 500, "buckets": 4,
-              "bloom_keys_per_bucket": 500}
+    common = {"schedule_quantity_limitation": 500, "buckets": 4}
     ctx1 = CrawlContext(spark, cat, rules1, pages, robots, settings=dict(common))
     # stop after ONE round: the home fetch discovered list+detail links that
     # now sit un-popped in the frontier under the about-to-die rule keys

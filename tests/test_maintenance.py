@@ -27,7 +27,7 @@ def ctx(spark, tmp_path_factory):
     c = CrawlContext(
         spark, Catalog(tmp_path_factory.mktemp("mt") / "wh"), rules,
         pages, synth.gen_robots_df(spark, PARAMS),
-        settings={"buckets": 4, "bloom_keys_per_bucket": 200},
+        settings={"buckets": 4},
     )
     run_rounds(c, 3)
     return c
@@ -158,7 +158,7 @@ def test_requeue_data_lack_refetches(spark, tmp_path):
     pages = spark.createDataFrame([(url, None, html, "t", "en")], schema.PAGES)
     cat = Catalog(tmp_path / "wh")
     c = CrawlContext(spark, cat, load_rules([rule]), pages, None,
-                     settings={"buckets": 4, "bloom_keys_per_bucket": 100})
+                     settings={"buckets": 4})
     run_rounds(c, 1)
     flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)
     assert [r["reason"] for r in flog.collect()] == ["data_lack"]
@@ -192,8 +192,7 @@ def test_requeue_lack_round_policy_knob(spark, tmp_path):
     pages = spark.createDataFrame([(url, None, html, "t", "en")], schema.PAGES)
     cat = Catalog(tmp_path / "wh")
     c = CrawlContext(spark, cat, load_rules([rule]), pages, None,
-                     settings={"buckets": 4, "bloom_keys_per_bucket": 100,
-                               "requeue_lack": True})
+                     settings={"buckets": 4, "requeue_lack": True})
     run_rounds(c, 2)
     flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)
     rows = sorted((r["round"], r["status"], r["reason"]) for r in flog.collect())
@@ -204,7 +203,7 @@ def test_requeue_lack_round_policy_knob(spark, tmp_path):
     # knob off: round 2 never re-fetches
     cat2 = Catalog(tmp_path / "wh2")
     c2 = CrawlContext(spark, cat2, load_rules([rule]), pages, None,
-                      settings={"buckets": 4, "bloom_keys_per_bucket": 100})
+                      settings={"buckets": 4})
     run_rounds(c2, 2)
     flog2 = cat2.read(spark, "fetch_log", schema.FETCH_LOG)
     assert flog2.count() == 1

@@ -83,7 +83,7 @@ def outcome(spark):
 
     rules = load_rules([_rule(["id"])])
     ctx = CrawlContext(spark, cat, rules, pages, None,
-                       settings={"buckets": BUCKETS, "bloom_keys_per_bucket": 100})
+                       settings={"buckets": BUCKETS})
     old_sig = hashlib.md5(json.dumps(["id", "x"]).encode()).hexdigest()
     state = {"round": 3, "first_schedule": {}, "consumed": {},
              "rules_sigs": [hashlib.md5(KEY.encode()).hexdigest()],
@@ -138,7 +138,7 @@ def test_unchanged_id_parameter_skips_repair(spark):
     pages = spark.createDataFrame([_page(c5)], schema.PAGES)
     rules = load_rules([_rule(["id"])])
     ctx = CrawlContext(spark, cat, rules, pages, None,
-                       settings={"buckets": BUCKETS, "bloom_keys_per_bucket": 100})
+                       settings={"buckets": BUCKETS})
     cur_sig = hashlib.md5(json.dumps(["id"]).encode()).hexdigest()
     state = {"round": 3, "first_schedule": {}, "consumed": {},
              "rules_sigs": [hashlib.md5(KEY.encode()).hexdigest()],

@@ -1,12 +1,10 @@
 """Unit tests: quota carry math (python vs distributed drawdown window),
-consume_quota pop semantics, per-host budget, bloom shard membership,
-snapshot catalog commit modes."""
+consume_quota pop semantics, per-host budget, snapshot catalog commit modes."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from neocrawler_spark.operators import bloom
 from neocrawler_spark.operators.scheduler import consume_quota, per_host_budget
 from neocrawler_spark.rules import quota_with_carry
 
@@ -87,37 +85,6 @@ def test_per_host_budget_exact_topk(spark):
     # exact k smallest seq per host despite salting
     assert [r["seq"] for r in hot] == [0, 1, 2]
     assert [r["seq"] for r in cold] == [50, 51, 52]
-
-
-# ------------------------------------------------------------- bloom
-def test_bloom_update_and_probe(spark):
-    hashes = [("%032x" % (i * 2654435761 % (1 << 128)), i % 4) for i in range(200)]
-    df = spark.createDataFrame(hashes, "url_hash string, bucket int")
-    empty = spark.createDataFrame([], bloom.BLOOM_SCHEMA)
-    shards = bloom.update_shards(spark, empty, df, expected_keys_per_bucket=500).persist()
-    assert shards.count() == 4
-
-    # no false negatives
-    probed = bloom.probe(df, shards)
-    assert probed.where(~F.col("maybe_seen")).count() == 0
-
-    # unseen keys: mostly negative (FP rate small), never errors
-    other = spark.createDataFrame(
-        [("%032x" % ((i + 10_000) * 2654435761 % (1 << 128)), i % 4) for i in range(500)],
-        "url_hash string, bucket int",
-    )
-    fp = bloom.probe(other, shards).where("maybe_seen").count()
-    assert fp < 25  # ~1% expected at 12 bits/key
-
-    # incremental merge keeps old membership
-    more = spark.createDataFrame(
-        [("%032x" % ((i + 777) * 40503 % (1 << 128)), 1) for i in range(50)],
-        "url_hash string, bucket int",
-    )
-    shards2 = bloom.update_shards(spark, shards, more, expected_keys_per_bucket=500)
-    merged = shards.where("bucket != 1").unionByName(shards2.where("bucket = 1"))
-    assert bloom.probe(df, merged).where(~F.col("maybe_seen")).count() == 0
-    assert bloom.probe(more, merged).where(~F.col("maybe_seen")).count() == 0
 
 
 # ------------------------------------------------------------- catalog
