@@ -60,6 +60,7 @@ ROUND_STRIDE = 1 << 40
 RANK_STRIDE = 1 << 32
 POP_OFFSET = 1 << 28  # seeds (offset 0) sort before quota pops within a rule
 DISC_RANK = 255  # discovery appends sort after all scheduled entries
+SEED_ISIN_LIMIT = 100_000  # most seed hashes probed as an isin literal (A2)
 
 DEFAULT_SETTINGS = {
     # reference defaults: /root/reference/instance/example/settings.json:8-19
@@ -268,6 +269,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     def _mark(name):
         _t[name] = _time.time()
     spark, cat, st = ctx.spark, ctx.catalog, ctx.settings
+    compiles0 = _codegen_compiles(spark)
     if state is None:
         state = load_state(cat)
     round_no = state["round"] + 1
@@ -421,7 +423,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     # broadcast join — one fewer broadcast-build job in the fr2 plan. Guarded
     # to config-sized lists; a pathological seed file keeps the join.
     seed_hashes = sorted({r[0] for r in seed_rows})
-    if len(seed_hashes) <= 100_000:
+    if len(seed_hashes) <= SEED_ISIN_LIMIT:
         not_seed_url = (~F.col("url_hash").isin(seed_hashes)
                         if seed_hashes else F.lit(True))
         fr = fr.withColumn("dup_rn", F.row_number().over(w_dup)).withColumn(
@@ -1153,6 +1155,11 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         "scheduled_backlog": backlog,
         "balance": balance,
         "commit_s": commit_s,
+        # Janino compiles while this round ran, counted for the whole session
+        # (a concurrent query's compiles land here too); 0 once every plan
+        # shape of the round is in the generated-code cache (session.py)
+        "codegen_compiles": (None if compiles0 is None
+                             else _codegen_compiles(spark) - compiles0),
     }
     new_state = {
         "round": round_no,
@@ -1187,6 +1194,16 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
                 f"round {round_no}: {n_bad} failures >= breaker {breaker}"
             )
     return new_state
+
+
+def _codegen_compiles(spark: SparkSession) -> int | None:
+    """Janino compiles so far in the session's JVM (Spark's CodegenMetrics
+    counts one per generated-code cache miss); None without a JVM gateway."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
 
 
 def _rank_expr(ctx: CrawlContext):

@@ -12,6 +12,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-code cache (spark.sql.codegen.cache.maxEntries, a static
+# conf, default 100) is an LRU of Janino-compiled classes keyed by their
+# source. One crawl round generates 220-285 classes, so at the default every
+# round evicts the previous one's and recompiles (and re-JITs) its whole plan.
+# Measured working set (4-core host, perfbench crawl and analytics, seed 0):
+# a three-round crawl compiles 430 distinct classes (240 + 129 + 61), a crawl
+# on a new round clock ~94 more (26 + 34 + 34, the classes that inline the
+# clock as long literals; the LRU ages them out), and the 14 analytics
+# queries 168-174. 4000 holds a crawl and the queries with ~6x headroom.
+CODEGEN_CACHE_ENTRIES = 4000
+
 
 def _default_driver_mem() -> str:
     """local[N] shares one JVM between driver and executors, so size the heap
@@ -100,6 +111,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

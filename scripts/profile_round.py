@@ -3,7 +3,8 @@
 
 Usage: python scripts/profile_round.py <cores> [rounds] [scale]
   scale: pages multiplier knob — details_per_list (default 50; hot = 4x).
-Prints per-round phase_s + commit_s JSON lines (the data bench.py discards).
+Prints per-round phase_s + commit_s + codegen_compiles JSON lines (the data
+bench.py discards).
 """
 import json
 import os
@@ -58,6 +59,7 @@ def main():
                 "round": m["round"], "fetched": m["fetched"], "failed": m["failed"],
                 "wall_s": round(m["wall_s"], 2),
                 "phase_s": m.get("phase_s"), "commit_s": m.get("commit_s"),
+                "codegen_compiles": m.get("codegen_compiles"),
             }), flush=True)
         wall = time.time() - t0
     finally:

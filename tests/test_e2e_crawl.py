@@ -3,13 +3,15 @@
 extracted text vs the generator goldens, quota/politeness behavior,
 rerun determinism, and crash-resume determinism."""
 
+import dataclasses
 import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from neocrawler_spark import schema, synth
-from neocrawler_spark.plans.round import CrawlContext, load_state, run_round
+from neocrawler_spark.plans import round as round_mod
+from neocrawler_spark.plans.round import CrawlContext, load_state
 from neocrawler_spark.rules import load_rules
 from neocrawler_spark.sources.tables import Catalog
 from neocrawler_spark.streaming.driver import run_rounds
@@ -18,14 +20,14 @@ PARAMS = synth.site_params(n_domains=2, cats=2, lists_per_cat=2, details_per_lis
                            hot_details_per_list=6)
 
 
-def make_ctx(spark, tmp_path, sub="wh", limit=500):
+def make_ctx(spark, tmp_path, sub="wh", limit=500, **settings):
     cat = Catalog(tmp_path / sub)
     rules = load_rules(synth.gen_rules(PARAMS))
     pages = synth.gen_pages_df(spark, PARAMS).cache()
     robots = synth.gen_robots_df(spark, PARAMS)
     return CrawlContext(
         spark, cat, rules, pages, robots,
-        settings={"schedule_quantity_limitation": limit, "buckets": 8},
+        settings={"schedule_quantity_limitation": limit, "buckets": 8, **settings},
     )
 
 
@@ -172,3 +174,32 @@ def test_quota_limit_respected(spark, tmp_path):
     m = run_rounds(ctx, 2)
     # round 2's newly scheduled from frontier ≤ balance (5) + seeds
     assert m[1]["fetched"] <= 5 + 4  # 4 = home seeds + macro seeds upper bound
+
+
+def test_repeated_round_compiles_nothing(spark, tmp_path):
+    """The generated-code cache (session.py) holds a round's working set: the
+    same round 1 on a second fresh catalog reuses every class the first one
+    compiled."""
+    a = make_ctx(spark, tmp_path, "first")
+    b = dataclasses.replace(a, catalog=Catalog(tmp_path / "second"))
+    m = [run_rounds(ctx, 1)[0] for ctx in (a, b)]
+    assert m[0]["codegen_compiles"] is not None
+    assert m[1]["codegen_compiles"] == 0
+
+
+def test_seed_broadcast_fallback_matches_isin(spark, tmp_path, monkeypatch):
+    """Past SEED_ISIN_LIMIT seed hashes the admission window excludes seed
+    URLs through a broadcast join instead of an isin literal; both give the
+    same crawl. A 30-minute round re-seeds the hourly home rules in round 3,
+    when the list seeds also sit in the frontier: only the seed exclusion
+    keeps them from being fetched twice."""
+    def crawl(sub):
+        ctx = make_ctx(spark, tmp_path, sub, schedule_interval=1800)
+        run_rounds(ctx, 3)
+        return {name: sorted(map(str, table(ctx, name, sch).collect()))
+                for name, sch in [("fetch_log", schema.FETCH_LOG),
+                                  ("url_state", schema.URL_STATE)]}
+
+    inset = crawl("inset")
+    monkeypatch.setattr(round_mod, "SEED_ISIN_LIMIT", 0)
+    assert crawl("join") == inset

@@ -192,6 +192,41 @@ def test_stale_trace_redetect_on_pop(spark, tmp_path):
     assert crawled.where(F.col("rule_key").endswith(":detail_v2")).count() > 0
 
 
+def test_removed_rule_degrades_without_crawling(spark, tmp_path):
+    """Remove a rule (no rename) while url_state, the frontier and the
+    scheduled backlog still hold its key: later rounds run, the frontier
+    entries no live rule matches are dropped on pop, and nothing is
+    extracted under the dead key."""
+    cat = Catalog(tmp_path / "rm")
+    pages = synth.gen_pages_df(spark, PARAMS).cache()
+    details = sorted(r["url"] for r in pages.where(F.col("url").contains("weixin_"))
+                     .select("url").collect())
+    raw = synth.gen_rules(PARAMS)
+    for r in raw:
+        if r["alias"] == "list":
+            r["priority"] = 1  # rank the list seed before the detail seeds
+        if r["alias"] == "detail":
+            r["seed"] = details[:2]
+    dead = next(r["key"] for r in load_rules(raw) if r["key"].endswith(":detail"))
+    # no robots rows: default_host_budget gates every host, so round 1 fetches
+    # the home and list seeds and leaves the two detail seeds as backlog
+    settings = {"schedule_quantity_limitation": 500, "buckets": 4, "default_host_budget": 2}
+    run_rounds(CrawlContext(spark, cat, load_rules(raw), pages, None, settings=settings), 1)
+    for name, sch in [("url_state", schema.URL_STATE), ("frontier", schema.FRONTIER),
+                      ("scheduled", schema.SCHEDULED)]:
+        assert cat.read(spark, name, sch).where(F.col("rule_key") == dead).count() > 0, name
+
+    live = load_rules([r for r in raw if r["alias"] != "detail"])
+    m = run_rounds(CrawlContext(spark, cat, live, pages, None, settings=settings), 2)
+
+    assert [r["round"] for r in m] == [2, 3]
+    for name in ("crawled", "crawled_weixin"):
+        crawled = cat.read(spark, name, schema.CRAWLED)
+        assert crawled.where(F.col("rule_key") == dead).count() == 0, name
+    assert cat.read(spark, "frontier", schema.FRONTIER).where(
+        F.col("rule_key") == dead).count() == 0
+
+
 # ------------------------------------------------------------ download hook
 
 
@@ -249,4 +284,5 @@ def test_alert_hook_sees_every_round(spark, tmp_path):
         run_rounds(ctx, 4)
     assert len(calls) >= 1
     assert calls[-1][1]["failed"] + calls[-1][1]["denied"] >= 1  # tripped round alerted
+    assert all(isinstance(m["codegen_compiles"], int) for _, m in calls)
     assert [rn for rn, _ in calls] == sorted({rn for rn, _ in calls})  # once per round, in order

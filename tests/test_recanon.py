@@ -85,7 +85,7 @@ def outcome(spark):
     ctx = CrawlContext(spark, cat, rules, pages, None,
                        settings={"buckets": BUCKETS})
     old_sig = hashlib.md5(json.dumps(["id", "x"]).encode()).hexdigest()
-    state = {"round": 3, "first_schedule": {}, "consumed": {},
+    state = {"round": 3, "first_schedule": {},
              "rules_sigs": [hashlib.md5(KEY.encode()).hexdigest()],
              "id_sigs": {KEY: old_sig}}
     run_round(ctx, state)
@@ -140,7 +140,7 @@ def test_unchanged_id_parameter_skips_repair(spark):
     ctx = CrawlContext(spark, cat, rules, pages, None,
                        settings={"buckets": BUCKETS})
     cur_sig = hashlib.md5(json.dumps(["id"]).encode()).hexdigest()
-    state = {"round": 3, "first_schedule": {}, "consumed": {},
+    state = {"round": 3, "first_schedule": {},
              "rules_sigs": [hashlib.md5(KEY.encode()).hexdigest()],
              "id_sigs": {KEY: cur_sig}}
     run_round(ctx, state)
